@@ -13,10 +13,19 @@ queried as multi-hop ``out()`` chains (README.md:15-32) — here it is
 breadth-first frontier expansion.
 
 Scale notes (100 TB):
-- every round is one shuffle (frontier ⨝ edges on src) + one distinct;
-  the frontier is usually tiny vs. edges, so AQE plans it broadcast —
-  effectively a map-side hash probe per round;
+- a BFS round (``_bfs_levels``) is one plan, one shuffle (the dedup)
+  and one action. It expands as ``edges LEFT SEMI frontier``: a semi
+  join keeps the edge side's size estimate, so a frontier and visited
+  set under the broadcast threshold are broadcast and the edges
+  stream. The inner-join spelling got the product of its inputs as
+  its estimate, and on the sf0.01 bucketed store Catalyst broadcast
+  the whole edge relation every round instead, with the anti-join
+  against visited planned sort-merge. A round's checkpoint inherits
+  the edge relation's estimate, so past the threshold the joins plan
+  sort-merge and AQE converts them from runtime sizes;
 - ``localCheckpoint`` per round keeps the plan O(1) instead of O(2^k);
+  visited is the flat union of the round checkpoints (one leaf per
+  round), not re-checkpointed;
 - rounds are bounded by graph diameter; group-nesting depth is small
   in practice (the reference's README flow is depth 4);
 - high-degree hubs (allUsers-style vertices, SURVEY.md §4.4) inflate a
@@ -25,7 +34,10 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from functools import reduce
+
+from py4j.protocol import Py4JError
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .traversal import Graph
@@ -85,6 +97,95 @@ def _truncate(df: DataFrame) -> DataFrame:
         return ck
 
 
+def _drop_checkpoint(ck: DataFrame) -> None:
+    """Release a checkpoint's blocks now instead of whenever the JVM
+    collects its RDD. Best effort through the same py4j internals as
+    _truncate: a frame not backed by the checkpointed RDD is left to
+    the ContextCleaner. SparkContext.unpersistRDD is called directly
+    because RDD.unpersist logs a warning for every local checkpoint."""
+    try:
+        rdd = ck._jdf.queryExecution().analyzed().rdd()
+        ck.sparkSession._jsc.sc().unpersistRDD(rdd.id(), False)
+    except (AttributeError, Py4JError):
+        pass
+
+
+def _bfs_levels(
+    g: Graph,
+    source_ids: DataFrame,
+    edge_label: str | None,
+    max_iter: int,
+    advance=None,
+) -> list[DataFrame]:
+    """Frontier BFS from ``source_ids`` over ``g``'s (src, dst) edges,
+    the loop behind :func:`reachable_from`, :func:`shortest_paths` and
+    ``Traversal.repeat_out_until``. Returns the BFS levels: element 0
+    is the distinct source ids, element i the ids first reached in
+    round i (hop distance i). Levels are pairwise disjoint and one
+    column ``id``; only non-empty rounds are returned.
+
+    ``advance`` maps a round's new ids to the next frontier (default:
+    all of them); a round never re-reaches an id of any earlier level,
+    whether or not it was expanded.
+
+    A round is one plan and one action:
+    - expansion is ``edges LEFT SEMI frontier``. Frontier ids are
+      distinct, so its rows are the inner join's, but a semi join
+      keeps its left side's size estimate where the inner join's is
+      the product of its inputs. So a frontier and ``visited`` under
+      the broadcast threshold plan as broadcasts up front, the edges
+      stream, and the one shuffle is the dedup;
+    - convergence is read from an Observation counting the rows the
+      round's checkpoint materializes, so no take(1) job;
+    - ``visited`` is the flat union of the levels, one checkpointed
+      leaf per round and never re-checkpointed, so its estimate adds
+      across rounds instead of squaring;
+    - the source checkpoint is lazy and fuses into round 1's job, and
+      the edge key is named ``id`` so that round's two broadcasts
+      (frontier and visited are both the sources) are one exchange."""
+    edges = g.edges
+    if edge_label is not None:
+        edges = edges.filter(F.col("label") == edge_label)
+    edges = edges.select(F.col("src").alias("id"), "dst")
+
+    sources = source_ids.select("id").dropDuplicates().localCheckpoint(eager=False)
+    levels = [sources]
+    visited = frontier = sources
+    for _ in range(max_iter):
+        seen = Observation()
+        new = _truncate(
+            edges.join(frontier, ["id"], "left_semi")
+            .select(F.col("dst").alias("id"))
+            .dropDuplicates()
+            .join(visited, ["id"], "left_anti")
+            .observe(seen, F.count(F.lit(1)).alias("n"))
+        )
+        if seen.get["n"] == 0:
+            _drop_checkpoint(new)
+            break
+        levels.append(new)
+        visited = visited.unionByName(new)
+        frontier = new if advance is None else advance(new)
+    return levels
+
+
+def _bfs_reached(
+    g: Graph,
+    source_ids: DataFrame,
+    edge_label: str | None,
+    max_iter: int,
+    advance=None,
+) -> DataFrame:
+    """The ids :func:`_bfs_levels` reaches in >= 1 hop, none of them a
+    source: the union of the levels after the first. No round's
+    checkpoint depends on the source checkpoint, so it is dropped; the
+    optimizer turns the ``limit(0)`` seed of the union into an empty
+    local relation, which never reads it."""
+    sources, *rounds = _bfs_levels(g, source_ids, edge_label, max_iter, advance)
+    _drop_checkpoint(sources)
+    return reduce(DataFrame.unionByName, rounds, sources.limit(0))
+
+
 def reachable_from(
     g: Graph,
     source_ids: DataFrame,
@@ -96,30 +197,14 @@ def reachable_from(
     following out-edges — BFS to fixpoint.
 
     The "does user U (transitively) have role R / project P" question
-    (README.md:15-32) is `reachable_from(g, {U})`.
-    """
-    edges = g.edges
-    if edge_label is not None:
-        edges = edges.filter(F.col("label") == edge_label)
-    edges = edges.select("src", "dst")
-
-    frontier = _truncate(source_ids.select("id").dropDuplicates())
-    visited = frontier
-    for _ in range(max_iter):
-        nxt = (
-            frontier.join(edges, frontier.id == edges.src)
-            .select(F.col("dst").alias("id"))
-            .dropDuplicates()
-            .join(visited, ["id"], "left_anti")
-        )
-        nxt = _truncate(nxt)
-        if not nxt.take(1):
-            break
-        visited = _truncate(visited.unionByName(nxt))
-        frontier = nxt
+    (README.md:15-32) is `reachable_from(g, {U})`. A source reached
+    from another source is a source, so it is excluded unless
+    ``include_sources``."""
     if include_sources:
-        return visited
-    return visited.join(source_ids.select("id"), ["id"], "left_anti")
+        return reduce(
+            DataFrame.unionByName, _bfs_levels(g, source_ids, edge_label, max_iter)
+        )
+    return _bfs_reached(g, source_ids, edge_label, max_iter)
 
 
 def reaching_to(
@@ -175,33 +260,16 @@ def shortest_paths(
     the GraphX ShortestPaths analog. Returns (id, distance) for every
     reachable vertex, sources at distance 0.
 
-    Same frontier-BFS shape as reachable_from (one shuffle per round,
-    checkpointed), tracking the round at which each vertex is first
-    reached — first-seen depth is minimal in BFS."""
-    edges = g.edges
-    if edge_label is not None:
-        edges = edges.filter(F.col("label") == edge_label)
-    edges = edges.select("src", "dst")
-
-    frontier = _truncate(source_ids.select("id").dropDuplicates())
-    dist = _truncate(frontier.select("id", F.lit(0).cast("int").alias("distance")))
-    for depth in range(1, max_iter + 1):
-        nxt = (
-            frontier.join(edges, frontier.id == edges.src)
-            .select(F.col("dst").alias("id"))
-            .dropDuplicates()
-            .join(dist, ["id"], "left_anti")
-        )
-        nxt = _truncate(nxt)
-        if not nxt.take(1):
-            break
-        dist = _truncate(
-            dist.unionByName(
-                nxt.select("id", F.lit(depth).cast("int").alias("distance"))
-            )
-        )
-        frontier = nxt
-    return dist
+    The BFS levels of reachable_from, each tagged with its round:
+    first-seen depth is minimal in BFS."""
+    levels = _bfs_levels(g, source_ids, edge_label, max_iter)
+    return reduce(
+        DataFrame.unionByName,
+        (
+            lv.select("id", F.lit(d).cast("int").alias("distance"))
+            for d, lv in enumerate(levels)
+        ),
+    )
 
 
 def weighted_shortest_paths(

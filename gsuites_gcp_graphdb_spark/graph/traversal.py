@@ -249,8 +249,7 @@ class Traversal:
         ``until=None`` is ``until(out().count().is(0))`` — run to the
         empty-frontier fixpoint; the result is every vertex reachable
         in >= 1 step (Gremlin's emit-union minus the start set). This
-        form COMPILES TO algorithms.reachable_from itself — the same
-        checkpointed-per-round, anti-join-deduped BFS loop, so the
+        form COMPILES TO algorithms.reachable_from itself, so the
         physical plan is identical to the algorithms path by
         construction (two surfaces, one loop), plus one left_semi to
         re-attach vertex properties.
@@ -262,12 +261,19 @@ class Traversal:
         vertices. A NULL predicate value counts as not-matching
         (the traverser keeps going), Gremlin's filter semantics.
 
+        Both forms run the BFS round of algorithms._bfs_levels: one
+        semi-join expansion, deduped against the levels so far, and
+        one checkpoint whose Observation is the convergence test — no
+        other Spark action per round. The predicate form only drops
+        halted vertices from the next frontier and filters the
+        reached levels once at the end.
+
         Like reachable_from, at most one edge label is supported per
         loop (the reference's traversals always repeat over the
         single 'in' membership label)."""
         assert self._kind == "V"
         assert len(labels) <= 1, "repeat_out_until: one edge label max"
-        from .algorithms import _truncate, reachable_from
+        from .algorithms import _bfs_reached, reachable_from
 
         label = labels[0] if labels else None
         verts = self._g.vertices
@@ -278,40 +284,19 @@ class Traversal:
                 edge_label=label,
                 max_iter=max_iter,
             )
-            out = verts.join(ids.select("id"), ["id"], "left_semi")
+            out = verts.join(ids, ["id"], "left_semi")
             return Traversal(self._g, out, "V")
-        edges = self._g.edges
-        if label is not None:
-            edges = edges.filter(F.col("label") == label)
-        edges = edges.select("src", "dst")
         cond = F.coalesce(until, F.lit(False))
-        frontier = _truncate(self._df.select("id").dropDuplicates())
-        visited = frontier
-        halted = None
-        for _ in range(max_iter):
-            nxt = (
-                frontier.join(edges, frontier.id == edges.src)
-                .select(F.col("dst").alias("id"))
-                .dropDuplicates()
-                .join(visited, ["id"], "left_anti")
-            )
-            nxt = _truncate(nxt)
-            if not nxt.take(1):
-                break
-            visited = _truncate(visited.unionByName(nxt))
-            nxt_v = verts.join(nxt, ["id"], "left_semi")
-            stop = nxt_v.filter(cond).select("id")
-            halted = (
-                stop if halted is None else halted.unionByName(stop)
-            )
-            halted = _truncate(halted)
-            frontier = _truncate(nxt_v.filter(~cond).select("id"))
-        if halted is None:
-            out = verts.join(
-                self._df.select("id").limit(0), ["id"], "left_semi"
-            )
-        else:
-            out = verts.join(halted, ["id"], "left_semi")
+        reached = _bfs_reached(
+            self._g,
+            self._df,
+            label,
+            max_iter,
+            advance=lambda new: verts.join(new, ["id"], "left_semi")
+            .filter(~cond)
+            .select("id"),
+        )
+        out = verts.filter(cond).join(reached, ["id"], "left_semi")
         return Traversal(self._g, out, "V")
 
     # ---- semi-join filters (the A14 pattern) ---------------------------

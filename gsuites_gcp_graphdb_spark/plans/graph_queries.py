@@ -412,7 +412,9 @@ def reachable_until_min_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     as g_reachable_from_user against the SAME recursive-CTE oracle,
     the g_motif_flagship two-surfaces-one-oracle pattern. The
     until=None (empty-frontier) form compiles to
-    algorithms.reachable_from itself, so the fixpoint plan cannot
+    algorithms.reachable_from itself, and every BFS surface runs the
+    one round of algorithms._bfs_levels (a semi-join expansion and
+    one checkpoint, no other action), so the fixpoint plan cannot
     diverge between the surfaces by construction; what this entry
     pins is the builder wiring around it — start-set derivation,
     vertex property re-attach, natural-key projection (mirrors the

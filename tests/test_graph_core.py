@@ -196,6 +196,41 @@ def test_reachability_golden(golden, spark):
     assert k_hop(g, src, 2).count() == 1
 
 
+def test_reachable_from_round_is_one_action(golden, spark):
+    """A BFS round is one plan and one action: on the golden chain
+    (four non-empty rounds from user1) a reachable_from call launches
+    no take job, and the checkpoints it leaves are one per non-empty
+    round, plus the source checkpoint when the sources are returned.
+    The empty last round's checkpoint is released."""
+    g = golden
+    g.counts()  # materialize the cached fixture outside the window
+    sc = spark._jsc.sc()
+    store = sc.statusStore()
+    src = g.V().has("email", "user1@domain.com").id_()
+
+    def run(include_sources):
+        sc.listenerBus().waitUntilEmpty()
+        jobs = store.jobsList(spark._jvm.java.util.ArrayList())
+        j0 = int(jobs.head().jobId())
+        before = set(spark._jsc.getPersistentRDDs().keySet())
+        out = reachable_from(g, src, include_sources=include_sources)
+        sc.listenerBus().waitUntilEmpty()
+        left = set(spark._jsc.getPersistentRDDs().keySet()) - before
+        jobs = store.jobsList(spark._jvm.java.util.ArrayList())
+        names = [
+            str(jobs.apply(i).name())
+            for i in range(jobs.length())
+            if int(jobs.apply(i).jobId()) > j0
+        ]
+        assert names and not [n for n in names if n.startswith("take ")]
+        return out, left
+
+    out, left = run(include_sources=False)
+    assert out.count() == 4 and len(left) == 4
+    out, left = run(include_sources=True)
+    assert out.count() == 5 and len(left) == 5
+
+
 def test_all_paths_golden(golden, spark):
     """path(): full chains source -> target, diamond counted twice."""
     from gsuites_gcp_graphdb_spark.graph.algorithms import all_paths
