@@ -235,13 +235,11 @@ HEADLINE = [
     # arithmetic over a banded cumulative scan), weekly retention
     # cohorts, MinHash estimator calibration (signature agreement vs
     # exact jaccard per candidate pair), pairwise-cosine histogram
-    # (embedding-collapse audit), and the hinted skew-aware traversal
-    # expansion
+    # (embedding-collapse audit)
     "ns_corpus_pps_sample",
     "ns_events_retention_cohorts",
     "ns_dedup_minhash_calibration",
     "ns_vec_pair_cos_hist",
-    "g_members_of_role_hinted",
     # round-9 late wave: LP-partition quality (modularity/conductance
     # over the 3-round LPA assignment) and chi-square source keyness
     "g_community_quality",

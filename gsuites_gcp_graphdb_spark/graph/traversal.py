@@ -9,8 +9,10 @@ This module provides the same fluent surface; each step appends stock
 DataFrame operations (filter / join / select), so the "IR" is a
 Catalyst logical plan and optimization (predicate pushdown, join
 selection, AQE skew handling) is Catalyst's job — the Spark analog of
-TinkerPop's strategy-rewrite phase (SURVEY.md §3 EP2). No step
-executes anything; terminal calls (count/next/hasNext/toDF) do.
+TinkerPop's strategy-rewrite phase (SURVEY.md §3 EP2). The
+expansion steps (outE/inE, hence out/in_) are one plain join that
+Catalyst and AQE plan. No step executes anything; terminal calls
+(count/next/hasNext/toDF) do.
 
 Semantics follow Gremlin bag semantics: ``out()`` yields one row per
 traverser (duplicates preserved); ``dedup()`` collapses them.
@@ -29,37 +31,10 @@ from .schema import EDGE_SCHEMA, VERTEX_SCHEMA, natural_key_col
 class Traversal:
     """A lazy chain over a vertex- or edge-shaped DataFrame."""
 
-    def __init__(
-        self,
-        graph: "Graph",
-        df: DataFrame,
-        kind: str,
-        frontier_bytes: int | None = None,
-    ):
+    def __init__(self, graph: "Graph", df: DataFrame, kind: str):
         self._g = graph
         self._df = df
         self._kind = kind  # 'V' | 'E'
-        # One-shot size hint for the NEXT expansion join (r8 VERDICT
-        # item 6): consumed by outE/inE, never propagated — a hint
-        # describes the frontier it was attached to, not its
-        # descendants.
-        self._frontier_bytes = frontier_bytes
-
-    def hint_size(self, nbytes: int) -> "Traversal":
-        """Attach a frontier size hint (bytes) for the next expansion
-        step. With a hint, outE/inE route through
-        operators.joins.skew_join_auto — the x64-validated regime
-        rule: broadcast the frontier into the edge scan when it fits
-        the threshold (the hub-skewed edge side then never shuffles,
-        so a hot key like ``allUsers`` or ``roles/owner``,
-        reference README.md:467-472, has no hot reducer to melt),
-        salted SMJ when neither side broadcasts. Catalyst's own
-        sizeInBytes estimate is unreliable for DERIVED frontiers
-        (post-join/filter plans carry multiplied estimates), which is
-        why the routing is hint-gated instead of always-on."""
-        return Traversal(
-            self._g, self._df, self._kind, frontier_bytes=int(nbytes)
-        )
 
     # ---- filter steps -------------------------------------------------
     def hasLabel(self, *labels: str) -> "Traversal":
@@ -107,72 +82,12 @@ class Traversal:
             e = e.filter(F.col("label").isin(list(labels)))
         return e
 
-    # Opt-in runtime probe for UNHINTED derived frontiers (r9 VERDICT
-    # item 6): a bounded limit(cap+1).count() decides broadcastability
-    # without trusting Catalyst's selectivity-free sizeInBytes.
-    AUTO_PROBE_CONF = "spark.graft.traversal.autoBroadcastProbe"
-    _PROBE_BYTES_PER_ROW = 32  # conservative: one bigint id + row overhead
-
-    def _probe_frontier_bytes(self) -> int | None:
-        """Count the frontier UP TO the broadcast row cap (cap =
-        threshold / 32B per id row): ``limit(cap+1).count()`` stops
-        growing once the cap is crossed, so the probe's cost is
-        bounded by the cap on the scan side — but it DOES execute the
-        frontier subplan once more than the real join will (no reuse
-        across jobs), which is why this is config-gated rather than
-        default: for a cheap frontier (label filter on the store) the
-        probe is ~a tenth of the join it saves; for an expensive
-        derived frontier it pays the frontier twice. Returns an
-        honest byte estimate when the frontier fits, None when it
-        exceeds the cap (caller: plain join + AQE — NOT salt; the
-        third-regime rule showed replicating a big frontier is the
-        catastrophic branch)."""
-        from ..operators.joins import parse_broadcast_threshold
-
-        spark = self._df.sparkSession
-        threshold = parse_broadcast_threshold(spark)
-        if threshold <= 0:
-            return None
-        cap = max(threshold // self._PROBE_BYTES_PER_ROW, 1)
-        n = self._df.select("id").limit(cap + 1).count()
-        if n > cap:
-            return None
-        return n * self._PROBE_BYTES_PER_ROW
-
     def _expand(self, labels: Sequence[str], edge_key: str) -> DataFrame:
         """Frontier ⋈ edges on ``edge_key`` (src for outE, dst for
-        inE). With a frontier size hint the join routes through
-        skew_join_auto with the EDGE side as the (potentially
-        hub-skewed) fact and the frontier as the dim — see
-        hint_size(); otherwise the stock join, where Catalyst +
-        AQE pick (and the bucketed store already co-locates the
-        edge side). With ``spark.graft.traversal.autoBroadcastProbe``
-        = true (r9 VERDICT item 6), an UNHINTED expansion first runs
-        the bounded count probe: fits-the-threshold routes through
-        skew_join_auto exactly as a hint would; exceeds-it falls
-        through to the stock plain+AQE join (never salt — the
-        third-regime rule)."""
+        inE): one stock join whose strategy Catalyst and AQE pick —
+        broadcast for a small frontier, AQE's skew split for a hot
+        key, and no stored-side Exchange on the bucketed store."""
         e = self._edges(labels)
-        frontier_bytes = self._frontier_bytes
-        if frontier_bytes is None:
-            spark = self._df.sparkSession
-            if (
-                str(
-                    spark.conf.get(self.AUTO_PROBE_CONF, "false")
-                ).lower()
-                == "true"
-            ):
-                frontier_bytes = self._probe_frontier_bytes()
-        if frontier_bytes is not None:
-            from ..operators.joins import skew_join_auto
-
-            f = self._df.select(F.col("id").alias(edge_key))
-            return skew_join_auto(
-                e,
-                f,
-                edge_key,
-                right_size_bytes=frontier_bytes,
-            ).select(*e.columns)
         f = self._df.select("id").alias("f")
         ea = e.alias("e")
         return f.join(

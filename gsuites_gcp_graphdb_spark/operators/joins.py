@@ -27,10 +27,7 @@ def parse_broadcast_threshold(spark) -> int:
 
     Spark accepts the value as a bare byte count or with a k/m/g
     suffix (optionally trailing 'b'), and ``-1`` disables
-    broadcasting. Shared by skew_join_auto's regime pick and
-    Traversal._probe_frontier_bytes' probe cap (r10 ADVICE: the
-    parse was duplicated verbatim; a unit-handling fix in one would
-    silently diverge the other's regime decision)."""
+    broadcasting. Used by skew_join_auto's regime pick."""
     thr = str(
         spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
     ).lower()
@@ -127,8 +124,6 @@ def skew_join_auto(
     key: str,
     salt: int = 16,
     how: str = "inner",
-    right_size_bytes: int | None = None,
-    left_size_bytes: int | None = None,
 ) -> DataFrame:
     """Skewed-fact-to-dim equi-join that PICKS the regime, encoding the
     round-6/7 x64 measurement (SCALING.md skew regimes): when the dim
@@ -139,13 +134,12 @@ def skew_join_auto(
     fixture); salting earns its 1.4-1.7x only when NEITHER side
     broadcasts and the hot key would overload one SMJ reducer.
 
-    Size source: the explicit ``right_size_bytes`` hint when the
-    caller knows (table statistics, manifest), else Catalyst's own
-    optimized-plan sizeInBytes estimate — the same pre-runtime
-    statistic the planner's broadcast decision uses, so the choice
-    here agrees with what Catalyst would have picked and simply adds
-    the salted fallback on the other side of the threshold. The
-    decision is plan-build-time and metadata-only (no job runs).
+    Size source: Catalyst's optimized-plan sizeInBytes estimate of
+    each side — the same pre-runtime statistic the planner's
+    broadcast decision uses, so the choice here agrees with what
+    Catalyst would have picked and simply adds the salted fallback on
+    the other side of the threshold. The decision is plan-build-time
+    and metadata-only (no job runs).
 
     THIRD regime (r9, measured on the x64-hub traversal probe):
     salting replicates the right side ``salt`` times, so it only
@@ -159,50 +153,33 @@ def skew_join_auto(
     partitions."""
     spark = right.sparkSession
     threshold = parse_broadcast_threshold(spark)
-    if right_size_bytes is None:
-        # py4j maps scala.math.BigInt through to a Python int already
-        right_size_bytes = int(
-            str(
-                right._jdf.queryExecution()
-                .optimizedPlan()
-                .stats()
-                .sizeInBytes()
-            )
-        )
-    if threshold > 0 and right_size_bytes <= threshold:
+    right_size = _plan_size_bytes(right)
+    if threshold > 0 and right_size <= threshold:
         return left.join(F.broadcast(right), [key], how)
     # A Catalyst estimate at/near defaultSizeInBytes (Long.Max) means
     # "no usable statistic" (e.g. an ExistingRDD/local relation) —
     # keep the r8 behavior there (salt: the caller reached for this
     # operator because the left side is hub-skewed).
     _UNKNOWN = 1 << 62
-    if right_size_bytes >= _UNKNOWN:
+    if right_size >= _UNKNOWN:
         return salted_join(left, right, key, salt=salt, how=how)
-    if left_size_bytes is None:
-        left_size_bytes = int(
-            str(
-                left._jdf.queryExecution()
-                .optimizedPlan()
-                .stats()
-                .sizeInBytes()
-            )
-        )
-        # For DERIVED plans (post-join/filter frontiers) Catalyst's
-        # sizeInBytes is the multiplied, selectivity-free statistic
-        # hint_size's docstring warns about — an inflated left makes
-        # salt*right pass the quarter test and re-introduces the 13x
-        # replication regression the third regime exists to avoid
-        # (r9 ADVICE). Trust only an explicit caller hint for the
-        # quarter test's numerator headroom; an un-hinted estimate at
-        # the unknown sentinel is treated as "no statistic" and the
-        # safe regime is plain + AQE skew-split.
-        if left_size_bytes >= _UNKNOWN:
-            return left.join(right, [key], how)
-    if right_size_bytes * salt <= max(
-        8 * max(threshold, 0), left_size_bytes // 4
-    ):
+    left_size = _plan_size_bytes(left)
+    # An unknown left estimate leaves the quarter test nothing to
+    # compare against; the safe regime is plain + AQE skew-split,
+    # never a 16x replication of the right side.
+    if left_size >= _UNKNOWN:
+        return left.join(right, [key], how)
+    if right_size * salt <= max(8 * max(threshold, 0), left_size // 4):
         return salted_join(left, right, key, salt=salt, how=how)
     return left.join(right, [key], how)
+
+
+def _plan_size_bytes(df: DataFrame) -> int:
+    """Catalyst's optimized-plan sizeInBytes estimate for ``df``."""
+    # py4j maps scala.math.BigInt through to a Python int already
+    return int(
+        str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    )
 
 
 def range_join(

@@ -748,14 +748,6 @@ CATALOG: dict[str, QueryDef] = {
         ORDER BY email
         """,
     ),
-    "g_members_of_role_hinted": QueryDef(
-        gq.members_of_min_role_hinted,
-        f"""
-        SELECT DISTINCT c_name AS email FROM ({_USER_ROLE}) ur
-        WHERE ur.p_brand = (SELECT min(p_brand) FROM part)
-        ORDER BY email
-        """,
-    ),
     "g_two_hop_region": QueryDef(
         gq.two_hop_users_in_region,
         """

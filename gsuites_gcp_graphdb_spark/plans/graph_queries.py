@@ -20,6 +20,7 @@ from ..graph.algorithms import reachable_from
 from ..graph.build import build_graph
 from ..graph.schema import natural_key_col, vertex_id
 from ..graph.traversal import Graph
+from ..sources.fixtures import _path_sig
 
 
 # Per-process graph cache: the derived graph is deterministic per
@@ -35,13 +36,10 @@ def graph_store_prefix(sf_dir: str) -> str:
     size) so a REGENERATED fixture can never be served by a stale
     store — the store silently misses and the build path runs."""
     import hashlib
-    import os
 
     sig = [sf_dir.rstrip("/")]
     try:
-        for fn in sorted(os.listdir(sf_dir)):
-            st = os.stat(os.path.join(sf_dir, fn))
-            sig.append(f"{fn}:{st.st_mtime_ns}:{st.st_size}")
+        sig += [f"{fn}:{mt}:{sz}" for fn, mt, sz in _path_sig(sf_dir)]
     except OSError:
         pass
     h = hashlib.md5("|".join(sig).encode()).hexdigest()[:10]
@@ -232,35 +230,6 @@ def members_of_min_role(spark: SparkSession, sf_dir: str) -> DataFrame:
     members = (
         g.E()
         .where_inV_hasId(role_ids)
-        .outV()
-        .dedup()
-        .toDF()
-        .filter(F.col("label") == "user")
-    )
-    return members.select(F.col("email")).orderBy("email")
-
-
-def members_of_min_role_hinted(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Same A14 result as g_members_of_role, spelled through the
-    HINTED expansion path (r8 VERDICT item 6): the frontier is the
-    single min-name role vertex; hint_size routes the inE expansion
-    through operators.joins.skew_join_auto, so the tiny frontier
-    BROADCASTS into the edge scan and the (hub-skewed, at deployment
-    scale — reference README.md:467-472) membership edges never
-    shuffle. Measured 2.5x over the plain spelling on the x64-hub
-    dir (SCALING.md round-9 block). Shares g_members_of_role's
-    oracle verbatim: identical output is the correctness claim."""
-    g = _graph(spark, sf_dir)
-    roles = g.V().hasLabel("role")
-    target = roles.toDF().agg(F.min("name").alias("name"))
-    start = roles._with(
-        roles.toDF().join(target, ["name"], "left_semi")
-    )
-    members = (
-        start.hint_size(4096)
-        .inE("in")
         .outV()
         .dedup()
         .toDF()
@@ -2211,7 +2180,9 @@ def skew_membership_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def stream_ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Catalog surface (2-arg contract) — see _stream_ingest_e2e."""
+    """End-to-end streaming ingest of the user->role bindings through
+    the real Structured-Streaming path, then a traversal of the
+    ingested graph. The 2-arg catalog surface of _stream_ingest_e2e."""
     return _stream_ingest_e2e(spark, sf_dir)
 
 

@@ -1420,14 +1420,6 @@ def media_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench-only (xxhash64-based; no portable SQL twin — the md5
-    variant ns_dedup_simhash_md5 is the oracle-checked sibling)."""
-    dd.release_scratch()
-    docs = load_table(spark, sf_dir, "documents")
-    return dd.simhash_candidates(docs, max_hamming=3)
-
-
 def _sql_minhash_sig() -> str:
     mins = ",\n        ".join(
         f"""list_min(list_transform(sh, s -> md5(s || '|{j}'))) AS mh_{j}"""
@@ -4812,7 +4804,9 @@ def events_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def events_funnel_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Catalog surface (2-arg contract) — see _events_funnel_stream."""
+    """CEP-style streaming pattern detection, the Structured Streaming
+    twin of ns_events_funnel. The 2-arg catalog surface of
+    _events_funnel_stream."""
     return _events_funnel_stream(spark, sf_dir)
 
 

@@ -68,6 +68,10 @@ _SCHEMA_CACHE: dict[str, tuple[tuple, object]] = {}
 
 
 def _path_sig(path: str) -> tuple:
+    """(mtime_ns, size) of a file; for a directory, (name, mtime_ns,
+    size) of each top-level entry. Not recursive: fixture tables are
+    flat single parquet files, so a fixture dir's listing covers every
+    byte a query reads (the same signature keys graph_store_prefix)."""
     if os.path.isdir(path):
         return tuple(
             (fn, s.st_mtime_ns, s.st_size)

@@ -16,7 +16,7 @@ and could never hash-match an oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -111,23 +111,6 @@ def session_window_streaming_agg(events: DataFrame, gap: str = "30 minutes") -> 
             F.col("w.start").alias("session_start"),
             "n_events",
         )
-    )
-
-
-def read_event_stream(
-    spark: SparkSession, path: str, watermark: str = "30 minutes"
-) -> DataFrame:
-    """File-source stream over event parquet with an event-time
-    watermark: late rows beyond the watermark are dropped by
-    stateful operators downstream. maxFilesPerTrigger throttles
-    micro-batches — the streaming analog of the reference's API rate
-    limiter (main.go:99-102)."""
-    schema = spark.read.parquet(path).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-        .withWatermark("ts", watermark)
     )
 
 

@@ -1,13 +1,16 @@
-"""BFS loops (graph.algorithms._bfs_levels and its callers) against a
-Python BFS on the sf0.001 fixture graph.
+"""BFS loops (graph.algorithms._bfs_levels and its callers) and the
+one-hop expansion steps (Traversal.outE/inE and the where_inV_hasId
+semi-join) against a Python BFS and edge list on the sf0.001 fixture
+graph.
 
 Every case runs three times: with the session's plans, with broadcast
-joins off, and with AQE off, so the semi-join round is shown not to
-depend on the physical plan it gets."""
+joins off, and with AQE off, so the semi-join round and the single
+expansion join are shown not to depend on the physical plan they
+get."""
 
 from __future__ import annotations
 
-from collections import defaultdict
+from collections import Counter, defaultdict
 
 import pytest
 from pyspark.sql import functions as F
@@ -58,7 +61,9 @@ class Fixture:
         self.spark = spark
         self.v, self.e = v.cache(), e.cache()
         self.g = Graph(self.v, self.e)
-        pairs = [(r.src, r.dst) for r in self.e.select("src", "dst").collect()]
+        self.pairs = pairs = [
+            (r.src, r.dst) for r in self.e.select("src", "dst").collect()
+        ]
         self.labels = {r.id: r.label for r in self.v.select("id", "label").collect()}
         self.adj = defaultdict(set)
         self.radj = defaultdict(set)
@@ -165,3 +170,49 @@ def test_repeat_out_until_predicate(fx, plan_mode):
     got = start.repeat_out_until("in", until=F.col("label") == "role").toDF()
     assert halted
     assert ids_of(got.select("id")) == halted
+
+
+def test_expansion_outE_keeps_duplicate_traversers(fx, plan_mode):
+    """outE yields one row per (traverser, edge): a frontier holding
+    the same vertex twice doubles its edges (Gremlin bag semantics)."""
+    hop1 = min(fx.user_levels[1])
+    frontier = [fx.user, fx.user, hop1]
+    want = Counter((s, d) for t in frontier for s, d in fx.pairs if s == t)
+    t = Traversal(fx.g, fx.ids(frontier), "V").outE("in")
+    got = Counter((r.src, r.dst) for r in t.toDF().collect())
+    assert got[(fx.user, hop1)] == 2
+    assert got == want
+
+
+def test_expansion_who_can_access_chain(fx, plan_mode):
+    """project.in_().hasLabel('role').in_().hasLabel('user'): one row
+    per path before dedup, each user once after."""
+    lbl = fx.labels
+
+    def users_via_roles(p):
+        return Counter(
+            u
+            for r in fx.radj[p]
+            if lbl.get(r) == "role"
+            for u in fx.radj[r]
+            if lbl.get(u) == "user"
+        )
+
+    projects = sorted(i for i, x in lbl.items() if x == "project")
+    project = max(projects, key=lambda p: (len(users_via_roles(p)), -p))
+    want = users_via_roles(project)
+    assert want
+    start = Traversal(fx.g, fx.v.filter(F.col("id") == project), "V")
+    t = start.in_("in").hasLabel("role").in_("in").hasLabel("user")
+    assert Counter(r.id for r in t.id_().collect()) == want
+    assert ids_of(t.dedup().id_()) == set(want)
+
+
+def test_expansion_where_inV_hasId_outV(fx, plan_mode):
+    """E().where_inV_hasId(ids).outV(): one tail vertex per edge into
+    the id set."""
+    roles = sorted(i for i, x in fx.labels.items() if x == "role")[:2]
+    want = Counter(s for s, d in fx.pairs if d in roles and s in fx.labels)
+    got = fx.g.E().where_inV_hasId(fx.ids(roles)).outV().id_()
+    assert want
+    assert Counter(r.id for r in got.collect()) == want

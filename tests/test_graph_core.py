@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from gsuites_gcp_graphdb_spark.graph.build import build_graph
 from gsuites_gcp_graphdb_spark.graph.literal import edges_of, vertices_of
-from gsuites_gcp_graphdb_spark.graph.traversal import Graph, Traversal
+from gsuites_gcp_graphdb_spark.graph.traversal import Graph
 from gsuites_gcp_graphdb_spark.graph.upsert import (
     assert_unique_keys,
     drop_all,
@@ -138,38 +138,6 @@ def test_repeat_out_until(golden):
         "in", until=F.col("label") == "nonexistent"
     )
     assert none.count() == 0
-
-
-def test_auto_broadcast_probe(golden, spark):
-    """r10 hint-free routing: _probe_frontier_bytes returns an honest
-    n*32 estimate when the frontier fits the broadcast row cap, None
-    when it exceeds it (caller then takes the plain+AQE branch, never
-    salt), and the config-gated probe changes plans only — results
-    are identical with it on or off."""
-    g = golden
-    t = g.V().hasLabel("group")  # 2 vertices
-    assert t._probe_frontier_bytes() == 2 * 32
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "32")
-    try:
-        # cap = 32B/32B = 1 row < 2 -> exceeds
-        assert t._probe_frontier_bytes() is None
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-    def expand():
-        return sorted(
-            (r.src, r.dst)
-            for r in g.V().hasLabel("user").outE("in").toDF().collect()
-        )
-
-    rows_off = expand()
-    spark.conf.set(Traversal.AUTO_PROBE_CONF, "true")
-    try:
-        rows_on = expand()
-    finally:
-        spark.conf.set(Traversal.AUTO_PROBE_CONF, "false")
-    assert rows_on == rows_off and len(rows_on) == 1
 
 
 def test_reachability_golden(golden, spark):

@@ -655,36 +655,36 @@ def test_skew_join_auto_regimes(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-def test_skew_join_auto_size_hint(spark):
-    """An explicit right_size_bytes hint overrides the statistic, and
-    the r9 third regime applies: a GENUINELY big right side (1 TiB
-    hint) must go PLAIN — replicating a big dim 16x buried the AQE
-    skew-split win 13x on the x64-hub traversal probe — while a
-    small-hinted dim with broadcasting disabled and a big left still
-    picks the salted spelling."""
+def test_skew_join_auto_estimates(spark):
+    """With broadcasting off, both regimes come from Catalyst's size
+    estimates: a big right side goes PLAIN (replicating a big dim 16x
+    buried the AQE skew-split win 13x on the x64-hub traversal probe),
+    while a small right side against a big left goes salted."""
     from gsuites_gcp_graphdb_spark.operators.joins import skew_join_auto
 
-    left = spark.range(0, 100).select((F.col("id") % 3).alias("k"), "id")
-    right = spark.createDataFrame(
-        [(i, i * 10) for i in range(3)], "k long, v long"
-    )
-    expected = sorted(map(tuple, left.join(right, "k").collect()))
-    out = skew_join_auto(left, right, "k", right_size_bytes=1 << 40)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "__salt" not in plan  # big dim: plain + AQE, never 16x'd
-    assert sorted(map(tuple, out.collect())) == expected
-
-    big_left = spark.range(0, 1_000_000).select(
-        (F.col("id") % 3).alias("k"), "id"
-    )
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        out2 = skew_join_auto(
-            big_left, right, "k", right_size_bytes=1000
+        left = spark.range(0, 100).select((F.col("id") % 3).alias("k"), "id")
+        big_right = spark.range(0, 100_000).select(
+            F.col("id").alias("k"), (F.col("id") * 10).alias("v")
         )
+        expected = sorted(map(tuple, left.join(big_right, "k").collect()))
+        out = skew_join_auto(left, big_right, "k")
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "__salt" not in plan  # big dim: plain + AQE, never 16x'd
+        assert sorted(map(tuple, out.collect())) == expected
+
+        big_left = spark.range(0, 1_000_000).select(
+            (F.col("id") % 3).alias("k"), "id"
+        )
+        small_right = spark.range(0, 3).select(
+            F.col("id").alias("k"), (F.col("id") * 10).alias("v")
+        )
+        out2 = skew_join_auto(big_left, small_right, "k")
         plan2 = out2._jdf.queryExecution().executedPlan().toString()
         assert "__salt" in plan2  # replication cheap vs left: salted
+        assert out2.count() == big_left.join(small_right, "k").count()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 

@@ -211,14 +211,11 @@ def main():
         # broadcast join; the calibration pair join must reuse the
         # persisted posting/signature scans (InMemoryTableScan both
         # sides); the cosine histogram is one (id, dim) equi-join +
-        # two hash-aggs; the hinted expansion must show the frontier
-        # on the BUILD side of a BroadcastHashJoin with the edge
-        # scan unshuffled
+        # two hash-aggs
         "ns_corpus_pps_sample",
         "ns_events_retention_cohorts",
         "ns_dedup_minhash_calibration",
         "ns_vec_pair_cos_hist",
-        "g_members_of_role_hinted",
         # round-9 late wave: community quality's aggregates must be
         # hash-aggs with the m scalar as a 1-row broadcast (the only
         # window-free plan atop the LPA rounds); keyness must
