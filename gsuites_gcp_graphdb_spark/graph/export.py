@@ -269,7 +269,7 @@ def save(g: Graph, path: str) -> None:
     shuffle back-fills the vertex write's small-file tail. Files are
     byte-identical to the sequential spelling — distinct output dirs,
     no shared state."""
-    from concurrent.futures import ThreadPoolExecutor
+    from ..session import run_concurrently
 
     def _wv():
         g.vertices.write.mode("overwrite").partitionBy("label").parquet(
@@ -281,9 +281,7 @@ def save(g: Graph, path: str) -> None:
             f"{path}/edges"
         )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        for f in [pool.submit(_wv), pool.submit(_we)]:
-            f.result()
+    run_concurrently(_wv, _we)
 
 
 def save_bucketed(
@@ -322,21 +320,17 @@ def save_bucketed(
     # registrations are serialized by Spark's thread-safe in-memory
     # catalog; the written tables are byte-identical to the
     # sequential spelling.
-    from concurrent.futures import ThreadPoolExecutor
+    from ..session import run_concurrently
 
     def _write(df, col, suffix):
-        df.write.mode("overwrite").bucketBy(buckets, col).sortBy(
-            col
-        ).saveAsTable(f"{table_prefix}_{suffix}")
+        w = df.write.mode("overwrite").bucketBy(buckets, col).sortBy(col)
+        return lambda: w.saveAsTable(f"{table_prefix}_{suffix}")
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futs = [
-            pool.submit(_write, g.vertices, "id", "vertices"),
-            pool.submit(_write, g.edges, "src", "edges"),
-            pool.submit(_write, g.edges, "dst", "edges_by_dst"),
-        ]
-        for f in futs:
-            f.result()
+    run_concurrently(
+        _write(g.vertices, "id", "vertices"),
+        _write(g.edges, "src", "edges"),
+        _write(g.edges, "dst", "edges_by_dst"),
+    )
 
 
 def load_bucketed(

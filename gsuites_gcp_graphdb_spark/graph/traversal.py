@@ -357,17 +357,24 @@ class Graph:
     def counts(self) -> tuple[int, int]:
         """tinkergraph[vertices:N edges:M]-style check (README.md:372).
 
-        The two counts are independent jobs, so they run CONCURRENTLY
-        (guide §2.6 — overlap independent jobs): on a freshly cached
-        graph this is the call that fills both caches, and the vertex
-        fill otherwise idles the cluster while the (bigger) edge fill
-        waits its turn. Results are unchanged — two scalar counts."""
-        from concurrent.futures import ThreadPoolExecutor
+        Each side is counted as the row count of its physical plan's
+        RDD under an empty projection: one job per side and no
+        shuffle, where ``DataFrame.count()`` is a global aggregate that
+        AQE runs as a map job plus a result job. A parquet scan with no
+        columns reads only its row groups' row counts, and the scan
+        keeps its partition parallelism. The two jobs are independent,
+        so they run concurrently (``session.run_concurrently``): on a
+        freshly cached graph this is the call that fills both caches,
+        completely, and the vertex fill would otherwise idle the box
+        while the (bigger) edge fill waits its turn."""
+        from ..session import run_concurrently
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fv = pool.submit(self.vertices.count)
-            fe = pool.submit(self.edges.count)
-            return fv.result(), fe.result()
+        def rows(df: DataFrame):
+            plan = df.select()._jdf.queryExecution()
+            return lambda: int(plan.toRdd().count())
+
+        nv, ne = run_concurrently(rows(self.vertices), rows(self.edges))
+        return nv, ne
 
     def cache(self) -> "Graph":
         self.vertices = self.vertices.cache()

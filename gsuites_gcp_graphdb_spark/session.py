@@ -4,14 +4,19 @@ Tested on ``local[$SPARK_GRAFT_CPUS]`` but configured the way a
 1000-executor cluster run would be: AQE on (runtime re-planning,
 skew-join splitting, partition coalescing), generous broadcast
 threshold so dimension tables never shuffle, Arrow enabled for the
-few Pandas-UDF operators.
+few Pandas-UDF operators. ``run_concurrently`` is the one way the
+package overlaps independent Spark actions.
 """
 
 from __future__ import annotations
 
+import logging
 import os
+from collections.abc import Callable
 
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
 
 
 def default_parallelism() -> int:
@@ -61,3 +66,35 @@ def get_spark(app_name: str = "gsuites-gcp-graphdb-spark") -> SparkSession:
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
+
+
+def run_concurrently(*thunks: Callable[[], object]) -> list:
+    """Run independent Spark actions at once (guide §2.6: one action's
+    single-task tail idles the box the other can fill) and return
+    their results in argument order. The first thunk runs on the
+    calling thread, the rest on ``pyspark.InheritableThread``s, so the
+    job group and scheduler pool carry over to every job. All thunks
+    finish before this returns; the first failure in argument order
+    is raised and every other one logged."""
+    from pyspark import InheritableThread
+
+    outcomes: list = [None] * len(thunks)
+
+    def run(i: int) -> None:
+        try:
+            outcomes[i] = (thunks[i](), None)
+        except BaseException as exc:  # raised or logged below
+            outcomes[i] = (None, exc)
+
+    threads = [InheritableThread(run, args=(i,)) for i in range(1, len(thunks))]
+    for t in threads:
+        t.start()
+    run(0)
+    for t in threads:
+        t.join()
+    errors = [exc for _, exc in outcomes if exc is not None]
+    for exc in errors[1:]:
+        _log.error("a concurrent Spark action also failed", exc_info=exc)
+    if errors:
+        raise errors[0]
+    return [value for value, _ in outcomes]

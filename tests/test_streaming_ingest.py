@@ -4,6 +4,8 @@ at-least-once delivery)."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from gsuites_gcp_graphdb_spark.operators.joins import salted_join
@@ -78,8 +80,6 @@ def test_snapshot_store_crash_safety(spark, tmp_path):
     """A half-written NEW version must not corrupt the readable state:
     the pointer only moves after a complete write, and a junk version
     dir alongside it is invisible."""
-    import os
-
     from gsuites_gcp_graphdb_spark.graph.literal import edges_of, vertices_of
     from gsuites_gcp_graphdb_spark.graph.traversal import Graph
     from gsuites_gcp_graphdb_spark.streaming.ingest import _commit_snapshot
@@ -152,8 +152,6 @@ def test_delta_append_writes_o_batch(spark, tmp_path):
     small batch must persist O(batch) rows (a delta dir), NOT rewrite
     the O(graph) snapshot; replays commit nothing; compaction folds
     deltas back into one base."""
-    import os
-
     from gsuites_gcp_graphdb_spark.graph.literal import edges_of, vertices_of
     from gsuites_gcp_graphdb_spark.graph.schema import VERTEX_SCHEMA
     from gsuites_gcp_graphdb_spark.streaming.ingest import (
@@ -216,10 +214,10 @@ def test_compaction_bounds_file_census_over_50_commits(spark, tmp_path):
     previous manifest refs), and after the final compaction the
     traversal reads exactly ONE base dir — read amplification never
     grows with commit count, only with delta position in the
-    compaction window."""
-    import os
-
+    compaction window. The read-plan memo never holds more than
+    2 x _COMPACT_EVERY of the store's dirs."""
     from gsuites_gcp_graphdb_spark.graph.literal import edges_of, vertices_of
+    from gsuites_gcp_graphdb_spark.streaming import ingest as ing
     from gsuites_gcp_graphdb_spark.streaming.ingest import (
         _COMPACT_EVERY,
         _read_manifest,
@@ -250,6 +248,7 @@ def test_compaction_bounds_file_census_over_50_commits(spark, tmp_path):
         # keep-2: current refs (<= 1 base + _COMPACT_EVERY-1 deltas)
         # plus the previous manifest's refs
         assert n_dirs <= 2 * _COMPACT_EVERY, f"commit {i}: {n_dirs} dirs"
+        assert len(_memo_dirs(ing, gpath)) <= 2 * _COMPACT_EVERY, f"commit {i}"
     # compaction actually fired (window is smaller than 50 commits)
     assert max_deltas == _COMPACT_EVERY - 1
     # state is exactly the 50 unique rows
@@ -327,3 +326,220 @@ def test_crash_between_write_and_pointer_swap(spark, tmp_path, monkeypatch):
     # compaction folded everything into a single fresh base
     m2 = ing._read_manifest(gpath)
     assert m2["deltas"] == []
+
+
+# ---- store read path: Graph.counts, the per-directory plan memo and
+# session.run_concurrently ------------------------------------------
+
+
+def _store_with_deltas(spark, gpath):
+    """A store at a base plus two deltas (vertices and edges in each)."""
+    from gsuites_gcp_graphdb_spark.streaming.ingest import (
+        _read_manifest,
+        merge_graph_into_store,
+    )
+
+    for batch in (BATCH1, BATCH2, [("user:bob@x.com", "roles/owner")]):
+        v, e = bindings_to_graph_parts(spark.createDataFrame(batch, SCHEMA))
+        merge_graph_into_store(spark, gpath, v, e)
+    assert len(_read_manifest(gpath)["deltas"]) == 2
+
+
+def _memo_dirs(ing, gpath):
+    """The store dirs under ``gpath`` that have a read-plan memo entry."""
+    root = os.path.abspath(gpath) + os.sep
+    return [k[1] for k in list(ing._DIR_GRAPHS) if k[1].startswith(root)]
+
+
+def test_counts_match_dataframe_count(spark, tmp_path):
+    """Graph.counts() is (vertices.count(), edges.count()) on a cached
+    graph (which it fills completely), a base-plus-deltas snapshot, an
+    empty store graph and a filtered union."""
+    from gsuites_gcp_graphdb_spark.graph.literal import edges_of, vertices_of
+    from gsuites_gcp_graphdb_spark.graph.traversal import Graph
+    from gsuites_gcp_graphdb_spark.streaming.ingest import merge_graph_into_store
+
+    def both(g):
+        return g.vertices.count(), g.edges.count()
+
+    users = [("user", f"u{i}@x.com") for i in range(40)]
+    follows = [("user", f"u{i}@x.com", "user", f"u{i + 1}@x.com") for i in range(39)]
+    cached = Graph(
+        vertices_of(spark, users).repartition(4),
+        edges_of(spark, follows).repartition(8),
+    ).cache()
+    sc = spark._jsc.sc()
+    before = {int(r.id()) for r in sc.getRDDStorageInfo()}
+    try:
+        assert cached.counts() == (40, 39)
+        filled = sorted(
+            (int(r.numCachedPartitions()), int(r.numPartitions()))
+            for r in sc.getRDDStorageInfo()
+            if int(r.id()) not in before
+        )
+        assert filled == [(4, 4), (8, 8)]
+        assert cached.counts() == both(cached)
+    finally:
+        cached.vertices.unpersist()
+        cached.edges.unpersist()
+
+    gpath = str(tmp_path / "deltas")
+    _store_with_deltas(spark, gpath)
+    snap = load_snapshot(spark, gpath)
+    assert snap.counts() == both(snap) == (8, 5)
+
+    empty = str(tmp_path / "empty")
+    merge_graph_into_store(spark, empty, vertices_of(spark, []), edges_of(spark, []))
+    g0 = load_snapshot(spark, empty)
+    assert g0.counts() == both(g0) == (0, 0)
+
+    mixed = Graph(
+        snap.vertices.filter(F.col("label") == "role").unionByName(
+            vertices_of(spark, users[:3])
+        ),
+        snap.edges.filter(F.col("src") > 0).unionByName(edges_of(spark, follows)),
+    )
+    assert mixed.counts() == both(mixed)
+
+
+def test_counts_is_one_job_per_side_without_shuffle(spark, tmp_path):
+    """On a store snapshot one counts() call launches two jobs, each a
+    single stage that reads and writes no shuffle bytes."""
+    gpath = str(tmp_path / "store")
+    _store_with_deltas(spark, gpath)
+    g = load_snapshot(spark, gpath)
+    sc = spark._jsc.sc()
+    store = sc.statusStore()
+
+    def jobs():
+        sc.listenerBus().waitUntilEmpty()
+        listed = store.jobsList(spark._jvm.java.util.ArrayList())
+        return [listed.apply(i) for i in range(listed.length())]
+
+    j0 = max((int(j.jobId()) for j in jobs()), default=-1)
+    assert g.counts() == (8, 5)
+    new = [j for j in jobs() if int(j.jobId()) > j0]
+    assert len(new) == 2, [str(j.name()) for j in new]
+    no_q = spark._sc._gateway.new_array(spark._jvm.double, 0)
+    for job in new:
+        sids = job.stageIds()
+        assert sids.length() == 1
+        attempts = store.stageData(
+            int(sids.apply(0)), False, spark._jvm.java.util.ArrayList(), False, no_q
+        )
+        for a in range(attempts.length()):
+            st = attempts.apply(a)
+            assert int(st.shuffleReadBytes()) == int(st.shuffleWriteBytes()) == 0
+
+
+def test_store_memo_never_serves_stale_rows(spark, tmp_path):
+    """A store dir rewritten at the same path (a second full commit at
+    one seq) is read back with its new rows, although the first
+    commit's plan was memoized and reused."""
+    from gsuites_gcp_graphdb_spark.graph.literal import edges_of, vertices_of
+    from gsuites_gcp_graphdb_spark.graph.traversal import Graph
+    from gsuites_gcp_graphdb_spark.streaming import ingest as ing
+
+    def ids(vertices):
+        return {r.id for r in vertices.select("id").collect()}
+
+    gpath = str(tmp_path / "g")
+    no_edges = edges_of(spark, [])
+    first = vertices_of(spark, [("user", "a@x.com"), ("user", "b@x.com")])
+    second = vertices_of(spark, [("user", "c@x.com"), ("user", "d@x.com")])
+    ing._commit_snapshot(Graph(first, no_edges), gpath, 0)
+    key = (id(spark.sparkContext), os.path.abspath(os.path.join(gpath, "v0")))
+    assert ids(load_snapshot(spark, gpath).vertices) == ids(first)
+    planned = ing._DIR_GRAPHS[key][1]
+    assert ids(load_snapshot(spark, gpath).vertices) == ids(first)
+    assert ing._DIR_GRAPHS[key][1] is planned  # the second load was a hit
+    ing._commit_snapshot(Graph(second, no_edges), gpath, 0)
+    assert ing._read_manifest(gpath)["base"] == "v0"
+    assert ids(load_snapshot(spark, gpath).vertices) == ids(second)
+    assert ing._DIR_GRAPHS[key][1] is not planned
+
+
+def test_store_memo_drops_pruned_dirs(spark, tmp_path, monkeypatch):
+    """Every memo entry of a store names a dir that still exists, and a
+    store never holds more than 2 x _COMPACT_EVERY entries."""
+    from gsuites_gcp_graphdb_spark.graph.literal import edges_of, vertices_of
+    from gsuites_gcp_graphdb_spark.streaming import ingest as ing
+
+    monkeypatch.setattr(ing, "_COMPACT_EVERY", 2)
+    gpath = str(tmp_path / "pruned")
+    no_edges = edges_of(spark, [])
+    for i in range(7):
+        ing.merge_graph_into_store(
+            spark, gpath, vertices_of(spark, [("user", f"p{i}@x.com")]), no_edges
+        )
+        load_snapshot(spark, gpath)
+        dirs = _memo_dirs(ing, gpath)
+        assert dirs and all(os.path.isdir(d) for d in dirs), dirs
+        assert len(dirs) <= 2 * ing._COMPACT_EVERY
+    assert load_snapshot(spark, gpath).counts() == (7, 0)
+
+
+def test_store_memo_is_per_session(spark, tmp_path):
+    """A second session in the same process gets plans of its own,
+    never the first session's."""
+    from gsuites_gcp_graphdb_spark.streaming import ingest as ing
+
+    gpath = str(tmp_path / "store")
+    _store_with_deltas(spark, gpath)
+    g1 = load_snapshot(spark, gpath)
+    other = spark.newSession()
+    g2 = load_snapshot(other, gpath)
+    for df in (g2.vertices, g2.edges):
+        assert df.sparkSession._jsparkSession.equals(other._jsparkSession)
+        assert not df.sparkSession._jsparkSession.equals(spark._jsparkSession)
+    assert g2.counts() == g1.counts() == (8, 5)
+    g3 = load_snapshot(spark, gpath)
+    assert g3.vertices.sparkSession._jsparkSession.equals(spark._jsparkSession)
+    assert len(_memo_dirs(ing, gpath)) == 3
+
+
+def test_run_concurrently(spark, caplog):
+    """The helper carries the caller's job group to every thunk, returns
+    results in argument order, waits for every thunk, raises the first
+    failure in argument order and logs the others."""
+    import logging
+    import time
+
+    import pytest
+
+    from gsuites_gcp_graphdb_spark.session import run_concurrently
+
+    sc = spark.sparkContext
+
+    def group():
+        return sc.getLocalProperty("spark.jobGroup.id")
+
+    sc.setJobGroup("graft-test-group", "run_concurrently")
+    try:
+        assert run_concurrently(group, group, lambda: 3) == [
+            "graft-test-group",
+            "graft-test-group",
+            3,
+        ]
+    finally:
+        sc._jsc.clearJobGroup()
+
+    done = []
+
+    def slow():
+        time.sleep(0.5)
+        done.append(1)
+
+    def fail(msg):
+        def f():
+            raise ValueError(msg)
+
+        return f
+
+    with caplog.at_level(logging.ERROR, logger="gsuites_gcp_graphdb_spark.session"):
+        with pytest.raises(ValueError, match="first"):
+            run_concurrently(slow, fail("first"), fail("second"))
+    assert done == [1]
+    assert any(
+        r.exc_info and "second" in str(r.exc_info[1]) for r in caplog.records
+    )
